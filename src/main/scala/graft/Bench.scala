@@ -42,45 +42,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // scale-adaptive shuffles: AQE starts every exchange at
-      // SPARK_GRAFT_INIT_PARTS partitions and coalesces down to its
-      // advisory size, so a fixed `cpus`-sized session no longer pins
-      // per-task shuffle volume to corpus/32 at probe scales — the
-      // documented production sizing discipline, applied through AQE
-      // instead of per-query repartitions. Defaults to `cpus` (no
-      // behavior change at the driver's sf0.1); the scale probes set
-      // it explicitly.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      // generated-class cache (Janino output, keyed on source text):
-      // the default 100-entry LRU thrashes under a 250+-query sweep —
-      // measured 1173 vs 891 compilations over a 116-query subset at
-      // 100 vs 2000 entries (~24% of compiles were LRU re-compiles of
-      // code an earlier query already built, plus their lost JIT
-      // warmup). Scale-neutral: caches compiled CLASSES, never data or
-      // results; a long-lived production driver benefits identically.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "2000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb switches streaming state to
-    // the RocksDB provider (off-heap/on-disk state, changelog
-    // checkpoints) — the documented production setting once state
-    // passes ~10M rows per executor (PLANS.md "streaming state at
-    // scale"): the default HDFSBacked provider holds every state row
-    // on the executor heap and the factor-1000 session probe (10M
-    // users) dies there with CANNOT_LOAD_STATE_STORE. Default
-    // unchanged — small-scale state fits the heap and HDFSBacked is
-    // faster there.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus())
 
     val t0 = System.nanoTime()
     val store = graft.model.GraftStore.forDir(spark, sfDir)
@@ -171,8 +133,8 @@ object Bench {
     val refTimes: Map[String, Double] =
       parseQueries(refPath, sfTagEarly).getOrElse(Map.empty)
 
-    // Queries that share cachePersist'd intermediates sort adjacently
-    // (q_dedup_*, q_pipeline_*); release the Dedup registry when the
+    // Queries that share Caches.persist'd intermediates sort adjacently
+    // (q_dedup_*, q_pipeline_*); release the registry when the
     // family prefix changes so the 160-query loop doesn't accumulate
     // persisted frames for the whole run (Verify.scala does the same).
     def family(n: String): String = n.split('_').take(2).mkString("_")
@@ -203,7 +165,7 @@ object Bench {
       val t = timeOnce(name, fn)
       val lastOfFamily =
         i + 1 >= selected.size || family(selected(i + 1)._1) != family(name)
-      if (lastOfFamily) { graft.pipeline.Dedup.releaseCaches(); graft.pipeline.Similarity.releaseCaches(); graft.ops.Caches.releaseCaches() }
+      if (lastOfFamily) graft.ops.Caches.releaseCaches()
       name -> t
     }
 
@@ -252,7 +214,7 @@ object Bench {
           val r = retry(name, i)
           val lastOfFamily = j + 1 >= suspects.size ||
             family(suspects(j + 1)._1._1) != family(name)
-          if (lastOfFamily) { graft.pipeline.Dedup.releaseCaches(); graft.pipeline.Similarity.releaseCaches(); graft.ops.Caches.releaseCaches() }
+          if (lastOfFamily) graft.ops.Caches.releaseCaches()
           r
         }
       val s1 = sweep()

@@ -2,23 +2,26 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 
-/** Within-query persisted-intermediates registry for the ops layer —
-  * the same discipline as [[graft.pipeline.Dedup.releaseCaches]] /
-  * Similarity: Catalyst plans are TREES, so a DataFrame referenced
-  * twice in one result plan is COMPUTED twice (exchange reuse only
-  * dedups identical shuffles, not arbitrary subtrees). Operators whose
-  * output plan embeds a small intermediate more than once (graph
-  * frontiers, consume chunks, sig-terms grouped counts) persist it
-  * here so the heavy upstream scan runs once per query instead of
-  * once per reference.
+/** The one persisted-intermediates registry. Catalyst plans are
+  * TREES, so a DataFrame referenced twice in one result plan is
+  * COMPUTED twice (exchange reuse only dedups identical shuffles, not
+  * arbitrary subtrees). Operators whose output plan embeds an
+  * intermediate more than once persist it here so the heavy upstream
+  * work runs once per query instead of once per reference: ops-layer
+  * graph frontiers, consume chunks and sig-terms grouped counts, the
+  * pipeline operators' shingle indexes, signatures, candidate sets and
+  * k-means corpora (Dedup, Similarity), and the query builders'
+  * decoded or sampled frames.
   *
-  * Everything registered is RESULT/DELTA-sized (path sets, chunk rows,
-  * grouped term counts), never a base table — and it is persisted
-  * INSIDE the timed query, computed fresh from the parquet inputs on
-  * every invocation. Harness loops (Bench/Verify/ProfileQueries/
-  * PlanDump) release at the same family boundaries where they release
-  * the Dedup/Similarity registries, so a long run never accumulates
-  * entries across query families. */
+  * Everything registered is persisted INSIDE the query that uses it
+  * and computed fresh from the parquet inputs on every invocation,
+  * never a base table. Spark's CacheManager dedups by logical plan,
+  * so repeated calls over the SAME input share one entry — but a
+  * long-lived session feeding DISTINCT inputs would accumulate
+  * entries until eviction pressure degrades the persisted store
+  * views. Harness loops (Bench/Verify/ProfileQueries/PlanDump) call
+  * [[releaseCaches]] once at each query-family boundary, so a long
+  * run never carries entries across families. */
 object Caches {
   private val registered =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()

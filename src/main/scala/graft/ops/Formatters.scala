@@ -85,11 +85,18 @@ object Formatters {
   }
 
   /** One row per (infoton, field, value) — the statement-level view the
-    * triple formatters project from. */
+    * triple formatters project from. The nested `system` columns are
+    * projected flat in their own `select` BEFORE the first explode:
+    * over a limited frame (any `Search.search` page) Spark 4.1's
+    * nested-field extraction otherwise loses `_extract_path` from the
+    * explode's input and planning fails with
+    * INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND (RoundtripSpec pins this). */
   private def exploded(infotons: DataFrame): DataFrame =
     infotons
       .where(col("fields").isNotNull)
-      .select(col("system.protocol").as("protocol"), col("system.path").as("path"),
+      .select(col("system.protocol").as("protocol"),
+        col("system.path").as("path"), col("fields"))
+      .select(col("protocol"), col("path"),
         explode(col("fields")).as(Seq("field", "values")))
       .select(col("protocol"), col("path"), col("field"),
         explode(col("values")).as("v"))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Caches
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,24 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Session-lifetime intermediates this module persisted (the kmeans
-    * iteration corpus) — same discipline as [[Dedup.releaseCaches]]:
-    * callers (Bench family boundaries, long-lived sessions) release
-    * after the consuming action. */
-  private val registered =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-
-  private def cachePersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    registered.add(p)
-    p
-  }
-
-  /** Unpersist every intermediate this module registered. */
-  def releaseCaches(): Unit = {
-    var df = registered.poll()
-    while (df != null) { df.unpersist(false); df = registered.poll() }
-  }
+  /** Forwards to [[Caches.releaseCaches]], the one persist registry
+    * (which also holds every intermediate this module persists). Kept
+    * only because the benchmark client (`perfbench/scala/Main.scala`)
+    * calls it; new code calls `Caches.releaseCaches()` directly. */
+  def releaseCaches(): Unit = Caches.releaseCaches()
 
   /** Partition a COMPUTE-DENSE frame by compute, not by input bytes.
     * Dense numeric/text corpora pack small on disk (200k embeddings ≈
@@ -54,7 +42,7 @@ object Similarity {
     // q_dedup_minhash_inc) just to read a partition count. A plan that
     // already shuffles is distributed at the session's shuffle width,
     // so only exchange-free (scan/narrow) plans probe their splits.
-    if (graft.ops.Caches.hasExchange(df)) df
+    if (Caches.hasExchange(df)) df
     else if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
@@ -724,8 +712,9 @@ object Similarity {
     // at family boundaries, and without this every kmeans call would
     // pin a MEMORY_AND_DISK copy of its corpus for the session
     // lifetime. The result frame itself stays registered so
-    // releaseCaches() still frees everything at a family boundary.
-    val out = cachePersist(
+    // Caches.releaseCaches() still frees everything at a family
+    // boundary.
+    val out = Caches.persist(
       assignFrame(e, cents, literalMax).select("vec_id", "cluster"))
     out.count()
     e.unpersist(false)
@@ -772,8 +761,8 @@ object Similarity {
     // Assignment work is n×k×dim flops — [[computeParallel]] splits
     // it across cores even when the corpus is one parquet split.
     // Persisted because the loop scans the corpus iters+1 times;
-    // released by [[releaseCaches]] at the bench family boundary.
-    val e = cachePersist(computeParallel(e0))
+    // released by [[Caches.releaseCaches]] at the bench family boundary.
+    val e = Caches.persist(computeParallel(e0))
     def round6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     var cents: IndexedSeq[IndexedSeq[Double]] =

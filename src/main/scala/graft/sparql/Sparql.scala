@@ -1958,12 +1958,13 @@ object Sparql {
     * join-of-scans persists its solution frame via
     * [[graft.ops.Caches.persistForSort]] (so the final sort's sample
     * pass does not execute the pipeline twice). The entry is
-    * result-sized and unpersisted at the next
-    * [[graft.ops.Caches.releaseCaches]] — harness loops call it at
-    * family boundaries; a LIBRARY caller issuing many queries in one
-    * session should call `Caches.releaseCaches()` periodically (e.g.
-    * after consuming each result) or the MEMORY_AND_DISK entries
-    * accumulate for the session's lifetime (ADVICE r17). */
+    * result-sized and lives in the one persist registry, next to
+    * every ops- and pipeline-layer intermediate; the next
+    * [[graft.ops.Caches.releaseCaches]] unpersists them all. Harness
+    * loops call it once per query-family boundary; a LIBRARY caller
+    * issuing many queries in one session should call it periodically
+    * (e.g. after consuming each result) or the MEMORY_AND_DISK
+    * entries accumulate for the session's lifetime. */
   def select(store: GraftStore, query: String): DataFrame = {
     val q0 = parse(query)
     require(!q0.ask, "ASK query — use Sparql.ask")

@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object AnnProbeDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32, "ERROR")
     val dirs = args.filterNot(_.startsWith("--"))
     val sem = args.contains("--sem2l")
     dirs.foreach { dir =>

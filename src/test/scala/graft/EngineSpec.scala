@@ -3050,17 +3050,17 @@ class EngineSpec extends AnyFunSuite {
     import graft.pipeline.{Curation, TextAnalysis}
     val d = spark.read.parquet(s"$Sf/documents.parquet")
     val spread = d.repartition(spark.sparkContext.defaultParallelism)
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r
-        .findAllIn(df.queryExecution.executedPlan.toString).length
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    def exchanges(plan: String): Int = "Exchange".r.findAllIn(plan).length
     for ((name, op) <- Seq[(String,
         org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
         "normalizeText" -> (Curation.normalizeText(_)),
         "scriptProfile" -> (TextAnalysis.scriptProfile(_)),
         "redactCards" -> (Curation.redactCards(_)))) {
       // single-split scan: at most the one deliberate roundrobin spread
-      val scanPlan = op(d).queryExecution.executedPlan.toString
-      val scanEx = exchanges(op(d))
+      val scanPlan = plan(op(d))
+      val scanEx = exchanges(scanPlan)
       assert(scanEx <= 1, s"$name shuffles beyond the spread: " +
         s"${scanPlan.take(600)}")
       if (scanEx == 1)
@@ -3068,9 +3068,10 @@ class EngineSpec extends AnyFunSuite {
           s"$name: the single exchange is not the compute spread: " +
             s"${scanPlan.take(600)}")
       // already-spread input: the operator itself adds NOTHING
-      assert(exchanges(op(spread)) == exchanges(spread),
+      val spreadPlan = plan(op(spread))
+      assert(exchanges(spreadPlan) == exchanges(plan(spread)),
         s"$name adds an exchange to a spread input: " +
-          s"${op(spread).queryExecution.executedPlan.toString.take(600)}")
+          s"${spreadPlan.take(600)}")
     }
   }
 

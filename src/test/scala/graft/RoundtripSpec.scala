@@ -140,6 +140,36 @@ class RoundtripSpec extends AnyFunSuite {
     }
   }
 
+  test("ntriples, trig and trix render a sorted Search.search page") {
+    import spark.implicits._
+    import graft.ops.{Formatters, Search}
+    // a parquet-backed store: the optimizer sees a real scan under the
+    // page's sort + limit, the shape every served search page has; the
+    // XML-safe subset so trix renders the same page as the other two
+    val dir = java.nio.file.Files.createTempDirectory("rt_page_").toString
+    try {
+      taggedFrame(strings.filter(xmlSafe)).write.mode("overwrite")
+        .parquet(dir)
+      val store = graft.model.GraftStore.fromInfotons(spark,
+        spark.read.parquet(dir), Some(Map("v" -> "s")))
+      val page = Search.search(store,
+        Search.Request(path = "/rt", sortBy = Some("v")), length = 5)
+      val pageLits = page.select(col("system.path"),
+          element_at(col("fields")("v"), 1).getField("s"))
+        .as[(String, String)].collect().toMap
+      assert(pageLits.size == 5)
+      checkStatements(Formatters.ntriples(page).as[String].collect()
+        .map(l => Rdf.parseLine(l).getOrElse(fail(s"unparseable: $l"))),
+        pageLits, "ntriples page")
+      checkStatements(Formatters.trig(page).as[String].collect()
+        .flatMap(Turtle.parse), pageLits, "trig page")
+      val (th, tt) = Formatters.trixWrap
+      checkStatements(Formatters.trix(page).as[String].collect()
+        .flatMap(l => graft.ingest.Trix.parse(th + l + tt)),
+        pageLits, "trix page")
+    } finally graft.model.GraftStore.rmTree(new java.io.File(dir))
+  }
+
   test("jsonldq formatter roundtrips lang+quad over arbitrary literals") {
     import spark.implicits._
     val expect = strings.zipWithIndex

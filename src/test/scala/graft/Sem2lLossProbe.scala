@@ -1,7 +1,6 @@
 package graft
 import graft.functions.VectorExprs
 import graft.pipeline.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** DIAGNOSTIC main (probe-only): decompose the two-level SemDeDup's
@@ -13,11 +12,7 @@ import org.apache.spark.sql.functions._
   * knob; the P-curve this prints is the measured tradeoff. */
 object Sem2lLossProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(32, "ERROR")
     args.foreach { dir =>
       val e0 = spark.read.parquet(s"$dir/embeddings.parquet")
         .select("vec_id", "embedding")

@@ -2,16 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all Spark-backed specs. */
+/** One shared local session for all Spark-backed specs. Four cores,
+  * whatever the host: the EngineSpec plan contracts pin exchange
+  * counts and partition shapes at this width. */
 object SparkSuite {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(4, "ERROR")
 }

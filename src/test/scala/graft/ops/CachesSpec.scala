@@ -66,6 +66,37 @@ class CachesSpec extends AnyFunSuite {
     }
   }
 
+  test("one releaseCaches frees pipeline and ops-layer entries alike") {
+    import s.implicits._
+    val cm = s.sharedState.cacheManager
+    def cachedRdds = s.sparkContext.getPersistentRDDs.size
+    // drain whatever earlier specs left registered; frames persisted
+    // outside the registry (store views) stay and are the baseline
+    Caches.releaseCaches()
+    val wasEmpty = cm.isEmpty
+    val before = cachedRdds
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog by the river"),
+      (2L, "the quick brown fox jumps over the lazy dog by the river bank"),
+      (3L, "an entirely different sentence about registry release")
+    ).toDF("doc_id", "text")
+    // a Dedup op that registers its signature and band intermediates
+    val pairs = graft.pipeline.Dedup.minhashLsh(docs)
+      .select("d1", "d2").as[(Long, Long)].collect()
+    assert(pairs.toSeq == Seq((1L, 2L)))
+    val pipelineEntries = cachedRdds - before
+    assert(pipelineEntries > 0, "minhashLsh registered no intermediates")
+    // next to an ops-layer entry
+    Caches.persist(docs.select(col("doc_id") * 7 as "k")).count()
+    assert(cachedRdds == before + pipelineEntries + 1)
+    assert(!cm.isEmpty)
+    Caches.releaseCaches()
+    assert(cachedRdds == before,
+      s"${cachedRdds - before} cached frames survived one release")
+    // run alone, the session starts empty and must end empty
+    assert(cm.isEmpty == wasEmpty)
+  }
+
   test("hasExchange launches no jobs (unlike .rdd under AQE)") {
     import s.implicits._
     val a = (1 to 100).toDF("x")
